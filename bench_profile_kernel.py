@@ -92,6 +92,10 @@ robots = spark.read.parquet(f"{{universe}}/robots.parquet")
 def noop(df):
     df.write.mode("overwrite").format("noop").save()
 
+def unseen(children):
+    # the URL-seen anti-join the epoch driver runs before enqueue
+    return children.join(frontier.select("url_fp"), "url_fp", "left_anti")
+
 # ---- warm pass (JIT, codegen, shuffle services) --------------------------
 allowed, _ = fr_ops.robots_split(frontier, robots)
 warm = fr_ops.pop_batch(allowed, domains, None, None, 0).persist()
@@ -99,8 +103,7 @@ wf = fetchsim.fetch_statuses(
     fetchsim.join_payload(warm, images, prune_buckets=False)).persist()
 wc = fetchsim.discover_children(wf, n_images).persist()
 noop(fr_ops.apply_fetch_outcome(wf, 0).select("url_fp", "status").unionByName(
-    fr_ops.enqueue_children(wc, frontier.select("url_fp"), 0)
-    .select("url_fp", "status")))
+    fr_ops.enqueue_children(unseen(wc), 0).select("url_fp", "status")))
 spark.catalog.clearCache()
 frontier.persist(StorageLevel.MEMORY_ONLY)
 frontier.count()
@@ -129,7 +132,7 @@ children = fetchsim.discover_children(fetched, n_images).persist()
 timed("children", lambda: noop(children))
 
 # ---- phase 4: enqueue rank + dedup/anti-join (children cached) -----------
-new_rows = fr_ops.enqueue_children(children, frontier.select("url_fp"), 0)
+new_rows = fr_ops.enqueue_children(unseen(children), 0)
 timed("enqueue", lambda: noop(new_rows.select("url_fp", "status")))
 
 # ---- phase 5: outcome transition (fetched cached) ------------------------

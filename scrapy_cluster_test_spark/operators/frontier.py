@@ -83,13 +83,13 @@ def bucketed_rank(
 
     ``small=True`` switches to ONE plain ``partitionBy(group)`` window —
     the physical strategy choice, not a semantic one: ranks are identical
-    either way (the bucketed form is proven equal to the plain window in
-    tests/test_distributed_rank.py), but the two-level form pays ~0.5-1 s
-    of fixed cost per call (a persist or exchange, a counts aggregation,
-    two broadcast offset joins) that only amortizes on multi-million-row
-    inputs, while the plain window's weakness — the Zipf head group
-    landing in one task — is harmless when the whole input fits in one
-    task anyway. Callers pass it when they KNOW the input is small from
+    either way (the bucketed form is proven equal to the plain window by
+    test_pop_batch_seq_matches_window_reference), but the two-level form
+    pays ~0.5-1 s of fixed cost per call (a persist or exchange, a counts
+    aggregation, two broadcast offset joins) that only amortizes on
+    multi-million-row inputs, while the plain window's weakness — the
+    Zipf head group landing in one task — is harmless when the whole input
+    fits in one task anyway. Callers pass it when they KNOW the input is small from
     data-dependent state (the epoch driver's committed pending count, a
     catalog query's table size), never from runtime sampling, so plans
     stay deterministic across parallelism levels.
@@ -198,82 +198,6 @@ def pop_seq_bucket() -> F.Column:
     ) + F.floor(F.col("crawl_time") / F.lit(POP_CT_BUCKET)).cast("long")
 
 
-def distributed_rank(
-    df: DataFrame, order_cols: list, out_col: str, group_cols: list | None = None
-) -> DataFrame:
-    """row_number over a total order WITHOUT a single-partition sort
-    (VERDICT r1 scale-killer #3) — optionally PER GROUP, without one
-    task per group (the hot-domain fix: a Zipf head domain holding ~27%
-    of the frontier made every plain ``partitionBy(domain)`` window an
-    Amdahl serial floor — measured 28% serial fraction at 3M URLs).
-
-    Two-level ranking: range-repartition on (group..., order...) — so
-    each group's rows tile CONTIGUOUS partitions in order — rank locally
-    per (partition, group), then add the count of the group's rows in
-    all earlier partitions. The offsets come from a triangular join over
-    the per-(partition, group) counts — ~(#groups + #partitions) rows,
-    so no Exchange SinglePartition appears anywhere in the plan
-    (asserted in tests/test_plans.py).
-
-    The produced ranks are IDENTICAL to ``row_number().over(W.orderBy(...))``
-    for any total order (the range boundaries — sampled, and possibly
-    AQE-coalesced — only decide which task computes which slice, never the
-    rank itself), so crawl logs stay byte-identical (test_crawl_equivalence).
-
-    The range layout MUST be materialized exactly once before both
-    consumers read it: ``part`` feeds the counts subtree AND the ranked
-    subtree, and without the eager checkpoint each subtree plans its own
-    range Exchange whose boundaries come from independent random
-    sampling. When the two layouts disagree, the inner join on ``_pid``
-    silently drops every row whose partition id the counts side never
-    produced — nondeterministic row LOSS that grows with the partition
-    count (observed: 140k children shrank to 21k at local[32]).
-    ``localCheckpoint(eager=True)`` pins one layout and one lineage for
-    both readers; at scale it is a single cached pass over the batch
-    being ranked, no extra shuffle.
-    """
-    ranked, _ = _distributed_rank_with_counts(df, order_cols, out_col, group_cols)
-    return ranked
-
-
-def _distributed_rank_with_counts(
-    df: DataFrame, order_cols: list, out_col: str, group_cols: list | None = None
-) -> tuple[DataFrame, DataFrame]:
-    """distributed_rank plus its internal per-(partition, group) counts
-    relation — callers that also need group TOTALS (e.g. pop_batch's
-    kind offsets) derive them from the counts instead of re-running the
-    rank's window+join subtree (the checkpoint below pins the layout, so
-    re-reading counts is one cheap pass over materialized narrow rows)."""
-    g = list(group_cols or [])
-    part = df.repartitionByRange(
-        *[F.col(c) for c in g + list(order_cols)]
-    ).withColumn("_pid", F.spark_partition_id())
-    part = part.localCheckpoint(eager=True)
-    counts = part.groupBy("_pid", *g).agg(F.count("*").alias("_c"))
-    cond = F.col("b._pid") < F.col("a._pid")
-    for c in g:
-        cond = cond & (F.col(f"a.{c}") == F.col(f"b.{c}"))
-    # counts is ~(#partitions × #groups) rows — broadcast the probe side so
-    # the triangular prefix-sum join never plans a SortMergeJoin
-    earlier = (
-        counts.alias("a")
-        .join(F.broadcast(counts.alias("b")), cond, "left")
-        .groupBy(
-            F.col("a._pid").alias("_pid"),
-            *[F.col(f"a.{c}").alias(c) for c in g],
-        )
-        .agg(F.coalesce(F.sum("b._c"), F.lit(0)).alias("_off"))
-    )
-    w_local = W.partitionBy("_pid", *g).orderBy(*order_cols)
-    ranked = (
-        part.withColumn("_lrk", F.row_number().over(w_local))
-        .join(F.broadcast(earlier), ["_pid"] + g)
-        .withColumn(out_col, (F.col("_lrk") + F.col("_off")).cast("long"))
-        .drop("_pid", "_lrk", "_off")
-    )
-    return ranked, counts
-
-
 def robots_split(pending: DataFrame, robots: DataFrame) -> tuple[DataFrame, DataFrame]:
     """Split pending rows into (allowed, blocked) via a broadcast join on
     (domain, path_bucket). Reference has no robots support (SURVEY Q13);
@@ -324,8 +248,8 @@ def pop_batch(
     the input is far below the ~10^6-row regime where the two-level
     bucketed ranks pay off; both ranks run as plain windows instead.
     Ranks, and therefore pops and crawl order, are identical either way
-    (tests/test_distributed_rank.py) — this is the same class of
-    stats-driven physical choice as broadcast vs shuffle join.
+    (test_pop_batch_seq_matches_window_reference) — this is the same
+    class of stats-driven physical choice as broadcast vs shuffle join.
     """
     cand = allowed_pending.withColumn("kind_rank", kind_rank())
 
@@ -362,8 +286,8 @@ def pop_batch(
         # instead: buckets quantize the dense (kind, priority,
         # crawl_time) prefix, so the hot domain's rows spread over
         # ~|frontier|/POP_CT_BUCKET parallel window tasks and ranks are
-        # IDENTICAL to the plain window (identity pinned in
-        # tests/test_distributed_rank.py).
+        # IDENTICAL to the plain window (identity pinned by
+        # test_pop_batch_seq_matches_window_reference).
         dom_bucket = (
             (F.shiftleft(F.col("kind_rank").cast("long"), 21)
              + F.col("priority").cast("long") + F.lit(1 << 20)) * F.lit(1 << 40)
@@ -498,17 +422,18 @@ def apply_fetch_outcome(popped_fetched: DataFrame, epoch: int) -> DataFrame:
 
 def enqueue_children(
     children: DataFrame,
-    frontier_fps: DataFrame,
     epoch: int,
     small_hint: bool = False,
 ) -> DataFrame:
     """Turn discovered child URLs into new frontier rows.
 
+    ``children`` must already exclude every fp in the URL-seen set (J1/D7;
+    `$setOnInsert` idempotence K2/D6) — that decision is
+    seen.filter_new_routed's. Here:
+
     * first-wins dedup within the epoch by fp, winner = lowest
       (parent_seq, child_k) — the reference's insertion-ordered
       `dict.fromkeys` dedup (D2);
-    * anti-join against ALL existing frontier fps — the URL-seen set
-      (J1/D7; `$setOnInsert` idempotence K2/D6);
     * crawl_time = (epoch+1)·10⁹ + enqueue rank over (parent_seq, child_k)
       — the FIFO position a sequential crawler would assign.
 
@@ -520,7 +445,6 @@ def enqueue_children(
         children.withColumn("rn", F.row_number().over(w_first))
         .filter(F.col("rn") == 1)
         .drop("rn")
-        .join(frontier_fps, "url_fp", "left_anti")
     )
     # (parent_seq, child_k) is unique per surviving child, so the
     # two-level rank reproduces the sequential FIFO numbering exactly.
@@ -536,7 +460,7 @@ def enqueue_children(
     # pop_batch's small_pop_hint) — the caller knows from data-dependent
     # state that this epoch's children are far below the regime where the
     # two-level rank's ~1 s of fixed cost pays off; ranks are identical
-    # either way (tests/test_distributed_rank.py).
+    # either way (bucketed_rank docstring).
     fresh, _ = bucketed_rank(
         fresh,
         F.floor(F.col("parent_seq") / F.lit(ENQ_SEQ_BUCKET)).cast("long"),

@@ -558,7 +558,7 @@ def frontier_pop_budgeted(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # the events table is bounded (~10^5 rows at sf0.1) and its size is a
     # data-dependent fact, so take the plain-window physical path — ranks
-    # identical to the bucketed one (tests/test_distributed_rank.py)
+    # identical to the bucketed one (test_pop_batch_seq_matches_window_reference)
     popped = fr_ops.pop_batch(
         frontier, budgets, seller_cap=40, asin_cap=25, seq_base=0,
         small_pop_hint=True,

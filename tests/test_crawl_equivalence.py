@@ -49,9 +49,13 @@ def crawl(spark):
     datagen.generate_all(
         spark, DATA, n_images=N_IMAGES, n_seeds=N_SEEDS, budget_scale=BUDGET_SCALE
     )
+    fallbacks_before = ep.PREPOP_FALLBACKS
     summary = ep.run_crawl(
         spark, _params(JOB_A, emit_child_context=True), resume=False
     )
+    # the gate must check the pipelined path: a failed prepop build falls
+    # back to the serial rebuild silently except for this counter
+    assert ep.PREPOP_FALLBACKS == fallbacks_before
     sim = simulate(
         f"{DATA}/images.parquet",
         datagen.seed_rows(N_IMAGES, N_SEEDS),

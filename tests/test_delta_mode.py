@@ -1,6 +1,6 @@
-"""Delta (merge-on-read) commit mode: identical crawl output to COW,
-resume-safe, and per-epoch write volume scaling with TOUCHED rows, not
-frontier size (VERDICT r1 scale-killer #4)."""
+"""Delta (merge-on-read) commits: crawl output equal to the oracle
+simulator, resume-safe, and per-epoch write volume scaling with TOUCHED
+rows, not frontier size (VERDICT r1 scale-killer #4)."""
 
 from __future__ import annotations
 
@@ -12,7 +12,11 @@ import pytest
 from scrapy_cluster_test_spark import datagen
 from scrapy_cluster_test_spark.plans import epoch as ep
 
+from . import crawl_oracle
+
 DATA = "/tmp/sct_delta_data"
+CAPS = dict(seller_cap=40, asin_cap=25)
+MAX_EPOCHS = 7
 
 
 @pytest.fixture(scope="module")
@@ -21,7 +25,15 @@ def universe(spark):
     return DATA
 
 
-def _params(job_dir, mode, **kw):
+@pytest.fixture(scope="module")
+def oracle(universe):
+    return crawl_oracle.simulate_universe(
+        DATA, 400, 8, max_epochs=MAX_EPOCHS, **CAPS
+    )
+
+
+def _params(job_dir, **kw):
+    kw.setdefault("max_epochs", MAX_EPOCHS)
     return ep.CrawlParams(
         images_path=f"{DATA}/images.parquet",
         seeds_path=f"{DATA}/seeds.parquet",
@@ -29,10 +41,7 @@ def _params(job_dir, mode, **kw):
         robots_path=f"{DATA}/robots.parquet",
         job_dir=job_dir,
         n_images=400,
-        seller_cap=40,
-        asin_cap=25,
-        max_epochs=7,
-        commit_mode=mode,
+        **CAPS,
         **kw,
     )
 
@@ -42,10 +51,7 @@ def _log(spark, job):
 
 
 def _final(spark, job):
-    cols = ep.FRONTIER_COLS
-    return sorted(
-        tuple(r) for r in ep.read_final_frontier(spark, job).select(*cols).collect()
-    )
+    return crawl_oracle.engine_final_state(ep.read_final_frontier(spark, job))
 
 
 def _metrics(spark, job):
@@ -53,22 +59,24 @@ def _metrics(spark, job):
     return sorted(tuple(r) for r in rows.collect())
 
 
-def test_delta_equals_cow(spark, universe, tmp_path):
-    cow, dlt = str(tmp_path / "cow"), str(tmp_path / "dlt")
-    ep.run_crawl(spark, _params(cow, "cow"))
-    ep.run_crawl(spark, _params(dlt, "delta", compact_every=3))
-    assert _log(spark, dlt) == _log(spark, cow)
-    assert _final(spark, dlt) == _final(spark, cow)
-    assert _metrics(spark, dlt) == _metrics(spark, cow)
+def test_delta_equals_oracle(spark, oracle, tmp_path):
+    dlt = str(tmp_path / "dlt")
+    ep.run_crawl(spark, _params(dlt, compact_every=3))
+    assert _log(spark, dlt) == crawl_oracle.crawl_log(oracle)
+    assert _final(spark, dlt) == crawl_oracle.final_state(oracle)
+    assert _metrics(spark, dlt) == sorted(oracle.metrics)
 
-    # write volume: delta commits carry ONLY touched rows
+    # write volume: delta commits carry ONLY touched rows — well under
+    # the full frontier a snapshot-per-epoch commit would rewrite
     def rows_written(job, sub):
         paths = glob.glob(f"{job}/epoch=0000[1-7]/{sub}")
         return sum(spark.read.parquet(p).count() for p in paths)
 
-    cow_rows = rows_written(cow, "frontier")
+    snapshot_rows = sum(
+        ep.read_commit(dlt, e)["n_frontier"] for e in range(1, MAX_EPOCHS + 1)
+    )
     delta_rows = rows_written(dlt, "delta")
-    assert delta_rows < cow_rows / 2, (delta_rows, cow_rows)
+    assert delta_rows < snapshot_rows / 2, (delta_rows, snapshot_rows)
 
     # compaction snapshots exist exactly at the configured cadence
     snaps = sorted(
@@ -88,86 +96,74 @@ def test_delta_equals_cow(spark, universe, tmp_path):
         assert buckets and len(files) <= len(buckets), (layer, len(files))
 
 
-def test_delta_bloom_carry_equals_cow(spark, universe, tmp_path):
-    """The carried-state fast path (use_bloom=True threads checkpointed
-    pending + seen relations between epochs, skipping the per-epoch disk
-    resolve entirely) must stay byte-identical to cow. Regression test
-    for the bug where the carried SEEN set held only pending fps: the
-    Bloom exact-verification anti-join (seen.filter_new_routed) then
-    re-enqueued already-done URLs, silently shifting enqueue ranks."""
-    cow, dlt = str(tmp_path / "cow"), str(tmp_path / "dlt")
-    ep.run_crawl(spark, _params(cow, "cow", use_bloom=True))
-    ep.run_crawl(spark, _params(dlt, "delta", compact_every=3, use_bloom=True))
-    assert _log(spark, dlt) == _log(spark, cow)
-    assert _final(spark, dlt) == _final(spark, cow)
-
-    # and a mid-chain resume (fresh process state: carry starts empty,
-    # first epoch falls back to the disk resolve) converges identically
-    part = str(tmp_path / "part")
-    p_short = _params(part, "delta", compact_every=3, use_bloom=True)
-    p_short.max_epochs = 4
-    ep.run_crawl(spark, p_short)
-    ep.run_crawl(spark, _params(part, "delta", compact_every=3, use_bloom=True))
-    assert _log(spark, part) == _log(spark, cow)
-
-
-def test_delta_resume_mid_chain(spark, universe, tmp_path):
+def test_delta_resume_mid_chain(spark, oracle, tmp_path):
     """Kill after a committed delta epoch (no compaction yet) → rerun
-    resumes and converges to the same final state as an uninterrupted
-    run."""
-    full, part = str(tmp_path / "full"), str(tmp_path / "part")
-    ep.run_crawl(spark, _params(full, "delta", compact_every=3))
-
-    p_short = _params(part, "delta", compact_every=3)
-    p_short.max_epochs = 4  # stops mid delta-chain (last compaction at 3)
-    ep.run_crawl(spark, p_short)
-    p_rest = _params(part, "delta", compact_every=3)
-    ep.run_crawl(spark, p_rest)  # resume=True continues from epoch 4
-    assert _log(spark, part) == _log(spark, full)
-    assert _final(spark, part) == _final(spark, full)
+    resumes (fresh process state: the carries start empty, so the first
+    epoch takes the disk resolve) and converges to the oracle."""
+    part = str(tmp_path / "part")
+    # stops mid delta-chain (last compaction at 3)
+    ep.run_crawl(spark, _params(part, compact_every=3, max_epochs=4))
+    ep.run_crawl(spark, _params(part, compact_every=3))  # resumes at epoch 4
+    assert _log(spark, part) == crawl_oracle.crawl_log(oracle)
+    assert _final(spark, part) == crawl_oracle.final_state(oracle)
 
 
-def test_resume_compacts_long_chain(spark, universe, tmp_path):
+def test_resume_compacts_long_chain(spark, oracle, tmp_path):
     """Resume-time carry warm-up (VERDICT r4 item #7): when the delta
     chain since the last compaction exceeds compact_every, resume writes
     ONE compaction snapshot up front so the first epoch's disk resolve is
     bounded by compact_every layers — and the crawl output is unchanged."""
-    full, part = str(tmp_path / "full"), str(tmp_path / "part")
-    ep.run_crawl(spark, _params(full, "delta", compact_every=3))
-
+    part = str(tmp_path / "part")
     # die at epoch 4 with NO in-run compaction (cadence larger than the
     # run) → chain base is the bootstrap snapshot, 4 delta layers deep
-    p_short = _params(part, "delta", compact_every=100)
-    p_short.max_epochs = 4
-    ep.run_crawl(spark, p_short)
+    ep.run_crawl(spark, _params(part, compact_every=100, max_epochs=4))
     assert ep._frontier_base_epoch(part, 4) == 0
     # resume with the normal cadence: 4 >= 3 → compaction fires at the
     # resume point before the first epoch runs
-    ep.run_crawl(spark, _params(part, "delta", compact_every=3))
+    ep.run_crawl(spark, _params(part, compact_every=3))
     assert os.path.isdir(f"{part}/epoch=00004/frontier")
     assert ep._frontier_base_epoch(part, 4) == 4
     assert not os.path.isdir(f"{part}/epoch=00004/_frontier_compact_tmp")
-    assert _log(spark, part) == _log(spark, full)
-    assert _final(spark, part) == _final(spark, full)
+    assert _log(spark, part) == crawl_oracle.crawl_log(oracle)
+    assert _final(spark, part) == crawl_oracle.final_state(oracle)
 
 
-def test_delta_torn_write_ignored(spark, universe, tmp_path):
+def test_delta_torn_write_ignored(spark, oracle, tmp_path):
     """An uncommitted (torn) delta epoch is discarded on resume."""
     job = str(tmp_path / "torn")
-    p = _params(job, "delta", compact_every=3)
-    p.max_epochs = 3
-    ep.run_crawl(spark, p)
+    ep.run_crawl(spark, _params(job, compact_every=3, max_epochs=3))
     # fake a torn epoch 4: delta dir present, no _COMMIT
     torn = f"{job}/epoch=00004/delta"
     os.makedirs(torn)
     spark.read.parquet(f"{job}/epoch=00003/delta").limit(3).write.mode(
         "overwrite"
     ).parquet(torn)
-    p2 = _params(job, "delta", compact_every=3)
-    out = ep.run_crawl(spark, p2)
-    ref_job = str(tmp_path / "ref")
-    ep.run_crawl(spark, _params(ref_job, "delta", compact_every=3))
-    assert _log(spark, job) == _log(spark, ref_job)
+    ep.run_crawl(spark, _params(job, compact_every=3))
+    assert _log(spark, job) == crawl_oracle.crawl_log(oracle)
+
+
+def test_reads_need_a_committed_epoch(spark, universe, tmp_path):
+    """The readers on a job dir with no committed epoch raise a clear
+    FileNotFoundError; after a crawl that committed only the bootstrap
+    epoch the log is empty with the log columns, and resuming that job
+    dir runs its first fetch epoch."""
+    empty = str(tmp_path / "empty")
+    os.makedirs(empty)
+    for read in (ep.read_final_frontier, ep.read_crawl_log):
+        with pytest.raises(FileNotFoundError, match="no committed epoch"):
+            read(spark, empty)
+
+    job = str(tmp_path / "boot")
+    assert ep.run_crawl(spark, _params(job, max_epochs=0))["epochs"] == 0
+    boot_log = ep.read_crawl_log(spark, job)
+    assert boot_log.columns == ep.LOG_COLS
+    assert boot_log.count() == 0
+    assert ep.read_final_frontier(spark, job).count() > 0  # the seeds
+
+    ep.run_crawl(spark, _params(job, max_epochs=1))
+    log = ep.read_crawl_log(spark, job)
+    assert log.count() > 0
+    assert log.schema.simpleString() == boot_log.schema.simpleString()
 
 
 def test_delta_bucket_pruning(spark, universe, tmp_path):
@@ -178,7 +174,7 @@ def test_delta_bucket_pruning(spark, universe, tmp_path):
     from pyspark.sql import functions as F
 
     job = str(tmp_path / "bkt")
-    ep.run_crawl(spark, _params(job, "delta", compact_every=100))
+    ep.run_crawl(spark, _params(job, compact_every=100))
     last = ep.last_committed_epoch(job)
     assert last and last >= 2
     # every committed delta epoch wrote _dbucket=K subdirs only for the

@@ -1,44 +1,10 @@
-"""Regression: distributed_rank must never lose rows.
-
-The counts subtree and the ranked subtree both read the range-partitioned
-relation; before the eager checkpoint each planned its OWN range Exchange
-with independently sampled boundaries, and when the layouts disagreed the
-inner join on _pid dropped every row in a partition id the counts side
-never produced (observed: 140k epoch children shrank to 21k at local[32],
-nondeterministically). This test drives enough rows through the rank that
-divergent sampling would show as a count/rank-set violation."""
+"""pop_batch's ranks — the two-level bucketed form, the salted
+prefilter and the plain-window small-input path — must reproduce the
+plain global row_number reference exactly."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
-
-from scrapy_cluster_test_spark.operators.frontier import distributed_rank
-
-N = 300_000
-
-
-def _ranked(spark):
-    df = spark.range(N).select(
-        (F.xxhash64("id")).alias("parent_seq"),
-        (F.col("id") % 7).alias("child_k"),
-    )
-    return distributed_rank(df, ["parent_seq", "child_k"], "rk")
-
-
-def test_rank_loses_no_rows_and_is_a_permutation(spark):
-    r = _ranked(spark).agg(
-        F.count("*").alias("n"),
-        F.countDistinct("rk").alias("n_rk"),
-        F.min("rk").alias("lo"),
-        F.max("rk").alias("hi"),
-    ).collect()[0]
-    assert (r.n, r.n_rk, r.lo, r.hi) == (N, N, 1, N), r
-
-
-def test_rank_deterministic_across_invocations(spark):
-    a = _ranked(spark).orderBy("rk").select("parent_seq").limit(50).collect()
-    b = _ranked(spark).orderBy("rk").select("parent_seq").limit(50).collect()
-    assert a == b
 
 
 def test_pop_batch_seq_matches_window_reference(spark):

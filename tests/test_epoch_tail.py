@@ -31,9 +31,7 @@ def universe(spark):
 
 
 def _params(job_dir, **kw):
-    kw.setdefault("commit_mode", "delta")
     kw.setdefault("compact_every", 3)
-    kw.setdefault("use_bloom", True)
     return ep.CrawlParams(
         images_path=f"{DATA}/images.parquet",
         seeds_path=f"{DATA}/seeds.parquet",
@@ -80,7 +78,7 @@ def test_concurrent_tail_equals_serial(spark, universe, tmp_path, monkeypatch):
 
 
 def test_pipelined_pop_equals_unpipelined(spark, universe, tmp_path, monkeypatch):
-    """Epoch pipelining (CrawlParams.pipeline_pop): building epoch k+1's
+    """Epoch pipelining (SCT_PIPELINE_POP=0 turns it off): building epoch k+1's
     pop/rank inside epoch k's tail is pure latency hiding — crawl log,
     final frontier and metrics are byte-identical to the unpipelined run
     (both head paths run the same _build_popped over the same carried
@@ -127,8 +125,8 @@ def test_tail_failure_aborts_epoch_uncommitted(
     def _boom(*a, **kw):
         raise RuntimeError("injected tail-job failure")
 
-    # epoch.py re-imports the seen module per call, so patching the
-    # module attribute reaches the tail job's closure
+    # epoch.py calls bloom_or_new through the seen module attribute, so
+    # patching it reaches the tail job's closure
     monkeypatch.setattr(seen_ops, "bloom_or_new", _boom)
     with pytest.raises(RuntimeError, match="injected tail-job failure"):
         ep.run_crawl(spark, _params(job))

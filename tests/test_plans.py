@@ -167,7 +167,7 @@ def test_pop_batch_no_single_partition_window(spark, universe):
         "queue_kind string, path_bucket int, parent_fp long, parent_seq long,"
         "child_k int",
     )
-    enq = fr_ops.enqueue_children(children, frontier.select("url_fp"), 0)
+    enq = fr_ops.enqueue_children(children, 0)
     assert "SinglePartition" not in _plan(enq), _plan(enq)[:3000]
 
 
